@@ -142,6 +142,26 @@ def minhash_signature(shingled: DataFrame, n_perm: int = 16) -> DataFrame:
     return shingled.selectExpr("doc_id", "shingles", f"{sig} as sig")
 
 
+def _checked_signatures(signed: DataFrame, sig_len: int, arg: str) -> DataFrame:
+    """A caller-supplied signature table with its contract enforced at
+    no extra Spark job: the columns are checked from the schema, and a
+    row whose ``sig`` is not ``sig_len`` long fails the plan that reads
+    it (``raise_error``) instead of banding a short or null signature."""
+    missing = [c for c in ("doc_id", "shingles", "sig") if c not in signed.columns]
+    if missing:
+        raise ValueError(
+            f"{arg} lacks column(s) {missing}; expected the output of "
+            f"minhash_signature (doc_id, shingles, sig)"
+        )
+    msg = F.concat(
+        F.lit(f"{arg}: sig must hold {sig_len} values, got "),
+        F.coalesce(F.size("sig").cast("string"), F.lit("null")),
+    )
+    return signed.withColumn(
+        "sig", F.when(F.size("sig") == sig_len, F.col("sig")).otherwise(F.raise_error(msg))
+    )
+
+
 def _band_keys(signed: DataFrame, n_bands: int, r: int) -> DataFrame:
     """Explode each signature into (doc_id, band_id, band_key) rows —
     the banded-LSH bucket keys (the ONLY shuffle key downstream)."""
@@ -279,7 +299,7 @@ def dedup_minhash(
         raise ValueError("n_passes must be >= 1")
     total_perm = n_passes * n_perm
     if signatures is not None:
-        signed = signatures
+        signed = _checked_signatures(signatures, total_perm, "signatures")
     else:
         shingled = shingle_hashes(df, n_shingle, text_col, id_col)
         # persist the signature table ONCE: the banded join reads it
@@ -418,7 +438,7 @@ def decontaminate(
 
     r = n_perm // n_bands
     if corpus_signatures is not None:
-        signed_c = corpus_signatures
+        signed_c = _checked_signatures(corpus_signatures, n_perm, "corpus_signatures")
     else:
         signed_c = minhash_signature(
             shingle_hashes(corpus, n_shingle, text_col, id_col), n_perm

@@ -5,7 +5,16 @@ Defaults chosen for correctness-vs-oracle and scale-readiness:
  - Arrow on (all heavy kernels are pandas/numpy batched),
  - UTC session timezone (oracle comparisons against DuckDB),
  - shuffle partitions sized to the local core count (the driver's
-   production deployment would size this to cluster cores instead).
+   production deployment would size this to cluster cores instead),
+ - Python workers forked from :mod:`scalablevectorsearch_spark.worker_daemon`
+   (``spark.python.daemon.module``). On Python 3.11 every task's
+   ``importlib.invalidate_caches()`` re-parses pyspark.zip's directory
+   once per zip importer, 70-100 ms of every Python task; the daemon
+   skips that while the archive's ``(st_mtime_ns, st_size, st_ino)`` is
+   unchanged, so a changed archive, new ``.py`` files and new zips are
+   still picked up. The workers already import this package to run its
+   kernels. Opt out with
+   ``extra_conf={"spark.python.daemon.module": "pyspark.daemon"}``.
 """
 
 from __future__ import annotations
@@ -69,6 +78,9 @@ def get_spark(
         # Transport only: bytes, results and plans are unchanged.
         .config("spark.python.unix.domain.socket.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # zip directories re-read only when the archive changed (module
+        # docstring); extra_conf can set pyspark.daemon back
+        .config("spark.python.daemon.module", "scalablevectorsearch_spark.worker_daemon")
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

@@ -10,7 +10,8 @@ layout), :340-352 (assemble-from-pieces with schema dispatch).
 
 Spark shape: ``save`` = one ``df.write.parquet`` per component table +
 one manifest.json; ``load`` = manifest validation (schema name, major
-version, declared tables present) + ``spark.read.parquet`` per table.
+version, declared tables present) + ``spark.read.parquet`` per table,
+with the schema Spark wrote into the footer so no inference job runs.
 An index on disk is exactly its DataFrames — readable by any Spark job,
 no custom binary format (the reference's mmap'd native file is a
 single-node optimization Spark's columnar scan replaces).
@@ -37,6 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST_NAME = "manifest.json"
+#: parquet footer key under which Spark stores the written DataFrame schema
+SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 BACKUP_NAME = "manifest.backup.json"
 FORMAT_VERSION = [0, 2, 0]
 
@@ -45,18 +48,53 @@ class ManifestError(ValueError):
     pass
 
 
+def _parts(table_dir: str) -> list[str]:
+    import glob
+
+    return sorted(glob.glob(os.path.join(table_dir, "*.parquet")))
+
+
 def _table_schema(table_dir: str) -> dict[str, str]:
     """Column -> arrow type string, from the parquet footer (no Spark
     job — the upgrader and save both run driver-side only)."""
-    import glob
-
     import pyarrow.parquet as pq
 
-    parts = sorted(glob.glob(os.path.join(table_dir, "*.parquet")))
+    parts = _parts(table_dir)
     if not parts:
         raise ManifestError(f"no parquet files under {table_dir}")
     sch = pq.read_schema(parts[0])
     return {name: str(sch.field(name).type) for name in sch.names}
+
+
+def _read_table(spark: SparkSession, table_dir: str) -> DataFrame:
+    """``spark.read.parquet`` with the schema Spark recorded in the
+    footer, which skips the schema-inference job; a table without that
+    key (or without part files) is read with inference as before."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    parts = _parts(table_dir)
+    meta = (pq.read_schema(parts[0]).metadata or {}) if parts else {}
+    row_meta = meta.get(SPARK_ROW_METADATA)
+    if row_meta is None:
+        return spark.read.parquet(table_dir)
+    schema = StructType.fromJson(json.loads(row_meta))
+    return spark.read.schema(schema).parquet(table_dir)
+
+
+def _dims_on_disk(table_dir: str, vec_col: str) -> int:
+    """Length of the first non-null ``vec_col`` value of a written
+    table, read through pyarrow on the driver (no Spark job); 0 when
+    the table holds no vector."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    for part in _parts(table_dir):
+        for batch in pq.ParquetFile(part).iter_batches(batch_size=1024, columns=[vec_col]):
+            sizes = pc.list_value_length(batch.column(0)).drop_null()
+            if len(sizes):
+                return int(sizes[0].as_py())
+    return 0
 
 
 def _arrow_schema(df: DataFrame) -> dict[str, str]:
@@ -86,8 +124,13 @@ def save_index(
     schema_name: str,
     params: dict[str, Any] | None = None,
     precomputed: set[str] | None = None,
+    dims_from: tuple[str, str] | None = None,
 ) -> dict[str, Any]:
     """Write component tables + manifest; returns the manifest dict.
+
+    ``dims_from``: ``(table, vector column)`` whose first written
+    vector's length is recorded as ``params["dims"]`` — read back from
+    the written files, so it costs no Spark job.
 
     ``precomputed``: table names already written under ``path`` by the
     caller (e.g. a disk-budgeted bulk build that streams the data table
@@ -116,13 +159,17 @@ def save_index(
         if name in skip:
             continue
         df.write.mode("overwrite").parquet(os.path.join(path, name))
+    params = dict(params or {})
+    if dims_from is not None:
+        table, vec_col = dims_from
+        params["dims"] = _dims_on_disk(os.path.join(path, table), vec_col)
     manifest = {
         "__schema__": schema_name,
         "__version__": FORMAT_VERSION,
         "tables": {
             name: _table_schema(os.path.join(path, name)) for name in sorted(tables)
         },
-        "params": params or {},
+        "params": params,
     }
     with open(os.path.join(path, MANIFEST_NAME), "w") as f:
         json.dump(manifest, f, indent=2, sort_keys=True)
@@ -182,7 +229,7 @@ def load_index(
                     f"found {found}, manifest {cols}"
                 )
     tables = {
-        name: spark.read.parquet(os.path.join(path, name)) for name in manifest["tables"]
+        name: _read_table(spark, os.path.join(path, name)) for name in manifest["tables"]
     }
     return manifest, tables
 
@@ -226,11 +273,6 @@ def upgrade_index(path: str, backup: bool = True) -> dict[str, Any]:
     return manifest
 
 
-def _dims_of(df: DataFrame, vec_col: str) -> int:
-    row = df.select(F.size(vec_col).alias("d")).limit(1).collect()
-    return int(row[0]["d"]) if row else 0
-
-
 # ---------------------------------------------------------------- vamana
 
 
@@ -246,7 +288,6 @@ def save_vamana(
     tables = {"data": data, "graph": index.graph}
     params = {
         "distance": index.distance,
-        "dims": _dims_of(index.base, index.vec_col),
         "n_shards": index.n_shards,
         "shard_by": "hash" if index.shard_model is None else "kmeans",
         "alpha": p.alpha,
@@ -325,7 +366,8 @@ def save_vamana(
             "shard_id", F.col("__id").alias("id")
         )
     return save_index(
-        path, tables, "vamana_index", params=params, precomputed=precomputed
+        path, tables, "vamana_index", params=params, precomputed=precomputed,
+        dims_from=("data", "vector"),
     )
 
 
@@ -343,7 +385,7 @@ def load_vamana(spark: SparkSession, path: str, validate: bool = False):
         validate_vector_table(
             data, expected_dims=p.get("dims") or None, check_ids_unique=True
         )
-    dims = _dims_of(data, "vector")
+    dims = _dims_on_disk(os.path.join(path, "data"), "vector")
     if p.get("dims") and dims and p["dims"] != dims:
         raise ManifestError(f"dims mismatch: manifest {p['dims']} vs data {dims}")
     params = VamanaParams(
@@ -469,8 +511,8 @@ def save_sq(
             "gmax": params.gmax,
             "scale": params.scale,
             "bias": params.bias,
-            "dims": _dims_of(packed, "qvector"),
         },
+        dims_from=("data", "qvector"),
     )
 
 

@@ -94,6 +94,18 @@ def test_dataset_split_salt_changes_assignment(spark):
     assert sum(a[k] != b[k] for k in a) > 0
 
 
+@pytest.mark.parametrize("salt", ["it's", "back\\slash", "\\'", "a\\\\'b''\\n"])
+def test_dataset_split_salt_with_quotes_and_backslashes(spark, salt):
+    """The salt reaches md5 byte for byte, whatever SQL escapes it holds."""
+    df = spark.range(300).withColumnRenamed("id", "doc_id")
+    got = dict(dataset_split(df, salt=salt).select("doc_id", "split").collect())
+    bounds = split_boundaries([0.9, 0.05, 0.05])
+    for doc_id in range(300):
+        h = hashlib.md5(f"{salt}:{doc_id}".encode()).hexdigest()[:4]
+        want = "train" if h < bounds[0] else ("val" if h < bounds[1] else "test")
+        assert got[doc_id] == want, (salt, doc_id)
+
+
 def test_pii_redact_handcrafted(spark):
     rows = [
         (0, "mail me at bob.smith+x@corp.example.org today"),

@@ -2,6 +2,7 @@
 version checks, vamana.cpp save/assemble, metamorphic save->load->search
 == direct search)."""
 
+import os
 import shutil
 
 import pytest
@@ -224,6 +225,78 @@ def test_layout_drift_detected(spark, base):
     ).parquet(f"{p}/data")
     with pytest.raises(ManifestError, match="drifted"):
         load_index(spark, p)
+
+
+def _job_ids(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return result, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_takes_schema_from_footer_without_a_job(spark, base):
+    """Spark-written tables load with the schema from their footer: no
+    schema-inference job, and the schema inference would give."""
+    p = f"{ART}/footer_schema"
+    save_index(p, {"data": base.limit(5), "ids": base.limit(5).select("id")}, "flat_data")
+    (_, tables), jobs = _job_ids(spark, "svs-test-load-index", lambda: load_index(spark, p))
+    assert jobs == []
+    for name, df in tables.items():
+        assert df.schema == spark.read.parquet(f"{p}/{name}").schema
+    assert tables["data"].count() == 5
+
+
+def test_load_infers_schema_of_foreign_table(spark, base):
+    """A table written without Spark's footer schema (here by pyarrow)
+    still loads, through inference."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = f"{ART}/foreign"
+    save_index(p, {"data": base.limit(3)}, "flat_data")
+    rows = base.limit(3).collect()
+    shutil.rmtree(f"{p}/data")
+    os.makedirs(f"{p}/data")
+    pq.write_table(
+        pa.table({
+            "id": pa.array([r["id"] for r in rows], pa.int64()),
+            "vector": pa.array([list(r["vector"]) for r in rows], pa.list_(pa.float32())),
+        }),
+        f"{p}/data/part-0.parquet",
+    )
+    _, tables = load_index(spark, p, check_layout=False)
+    got = sorted((r["id"], list(r["vector"])) for r in tables["data"].collect())
+    assert got == sorted((r["id"], list(r["vector"])) for r in rows)
+
+
+def test_vamana_save_load_dims_without_jobs(spark, base):
+    """dims comes from the written data table: save runs only its write
+    jobs, load runs none, and a manifest whose dims disagree with the
+    data is still refused."""
+    import json
+
+    from scalablevectorsearch_spark.sources.index_store import MANIFEST_NAME
+
+    idx = vamana_build(base, VamanaParams(graph_max_degree=8, window_size=20), n_shards=2)
+    p = f"{ART}/vamana_dims"
+    manifest, save_jobs = _job_ids(spark, "svs-test-save", lambda: save_vamana(idx, p))
+    assert manifest["params"]["dims"] == len(base.first()["vector"])
+    assert len(save_jobs) == len(manifest["tables"])  # one write job per table
+    loaded, load_jobs = _job_ids(spark, "svs-test-load", lambda: load_vamana(spark, p))
+    assert load_jobs == []
+    loaded.layout.unpersist()
+
+    mpath = os.path.join(p, MANIFEST_NAME)
+    with open(mpath) as f:
+        m = json.load(f)
+    m["params"]["dims"] += 1
+    with open(mpath, "w") as f:
+        json.dump(m, f)
+    with pytest.raises(ManifestError, match="dims mismatch"):
+        load_vamana(spark, p)
 
 
 def test_kmeans_sharded_vamana_roundtrip(spark, base, queries):

@@ -784,3 +784,60 @@ def test_dedup_minhash_n_passes_superset_and_identical_jaccard(docs):
 def test_dedup_minhash_n_passes_validation(docs):
     with pytest.raises(ValueError):
         dedup_minhash(docs.limit(2), n_passes=0)
+
+
+# ------------------------------------------ precomputed signature tables
+
+
+def _signed(df, n_perm=16):
+    return minhash_signature(shingle_hashes(df), n_perm)
+
+
+def test_precomputed_signatures_match_derived(docs, spark):
+    """A correct signature table passes the checks and gives the pairs
+    and the contamination hits the operators derive themselves."""
+    from scalablevectorsearch_spark.pipeline.dedup import decontaminate
+
+    base = docs.filter(F.col("doc_id") < 40)
+    mutated = base.filter(F.col("doc_id") < 2).select(
+        (F.col("doc_id") + 900).alias("doc_id"),
+        F.concat(F.col("text"), F.lit(" zzz")).alias("text"),
+    )
+    corpus = base.unionByName(mutated)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    assert rows(dedup_minhash(corpus, signatures=_signed(corpus))) == rows(
+        dedup_minhash(corpus)
+    )
+    assert rows(
+        decontaminate(base, mutated, corpus_signatures=_signed(base))
+    ) == rows(decontaminate(base, mutated))
+
+
+def test_precomputed_signatures_missing_column(docs):
+    from scalablevectorsearch_spark.pipeline.dedup import decontaminate
+
+    corpus = docs.limit(5)
+    no_sig = _signed(corpus).drop("sig")
+    with pytest.raises(ValueError, match=r"signatures lacks column\(s\) \['sig'\]"):
+        dedup_minhash(corpus, signatures=no_sig)
+    with pytest.raises(ValueError, match=r"corpus_signatures lacks column\(s\) \['shingles'\]"):
+        decontaminate(corpus, corpus, corpus_signatures=_signed(corpus).drop("shingles"))
+
+
+def test_precomputed_signatures_wrong_length(docs):
+    """A signature of the wrong length fails the operator's own plan
+    with a message naming the expected and found lengths. The type is
+    not asserted: when both sides of the band self-join fail at once,
+    AQE reports them together as a Py4JJavaError, not a PySparkException."""
+    from scalablevectorsearch_spark.pipeline.dedup import decontaminate
+
+    corpus = docs.limit(5)
+    short = _signed(corpus, n_perm=12)
+    with pytest.raises(Exception, match="signatures: sig must hold 32 values, got 12"):
+        dedup_minhash(corpus, n_passes=2, signatures=short).collect()
+    msg = "corpus_signatures: sig must hold 16 values, got 12"
+    with pytest.raises(Exception, match=msg):
+        decontaminate(corpus, corpus, corpus_signatures=short).collect()
